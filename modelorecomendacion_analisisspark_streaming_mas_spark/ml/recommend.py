@@ -17,6 +17,16 @@ Reference parity:
 Scale notes: ALS itself is MLlib's blocked factorization (checkpointing
 kicks in via spark.sparkContext.setCheckpointDir for >15 iterations at
 100 TB); serving fold-in is O(catalog x rank) NumPy -- broadcastable.
+Serving math stays on the request thread: the fold-in never calls a
+threaded BLAS routine (``gemv``, ``gesv``). The serving process also
+drives the live Structured Streaming query, and OpenBLAS's pool threads
+spin between calls instead of sleeping; at 10 requests/s they never
+sleep, and the spin takes three of four cores from the HTTP handlers
+and the stream's trigger planning and commits (numpy 1.26 bundled
+OpenBLAS on 4 cores: ``Y @ u`` on 2000x20 or a 20x20 ``np.linalg.solve``
+at 10 calls/s costs 300% CPU; ``einsum`` and ``eigh`` cost nothing
+measurable). No thread cap is set instead: that would be process-global
+BLAS state, and every other NumPy user in the process would inherit it.
 """
 
 from __future__ import annotations
@@ -164,6 +174,22 @@ def item_factor_matrix(model: ALSModel) -> tuple[np.ndarray, np.ndarray]:
     return ids, Y
 
 
+def _ridge_solve(Yr: np.ndarray, r: np.ndarray, reg: float) -> np.ndarray:
+    """Solve the fold-in ridge system (Yr^T Yr + reg * n * I) u = Yr^T r
+    (app4/recommender.py:39-46) on the calling thread.
+
+    The products are ``einsum`` loops, which never enter BLAS, and the
+    solve is a symmetric eigendecomposition, whose LAPACK path stays
+    single-threaded at ALS ranks. ``np.linalg.solve`` would run LU through
+    OpenBLAS's thread pool (module docstring, scale notes). For reg > 0
+    the matrix is positive definite, so every eigenvalue is >= reg * n.
+    """
+    A = np.einsum("ni,nj->ij", Yr, Yr) + reg * len(r) * np.eye(Yr.shape[1])
+    b = np.einsum("ni,n->i", Yr, r)
+    w, V = np.linalg.eigh(A)
+    return np.einsum("ij,j->i", V, np.einsum("ji,j->i", V, b) / w)
+
+
 def fold_in(
     item_ids: np.ndarray,
     Y: np.ndarray,
@@ -175,6 +201,13 @@ def fold_in(
     """M6: cold-start user vector from seed ratings via the ridge normal
     equations, then score the full catalog. Pure function of (factors,
     ratings) -- tested for agreement with ALSModel.transform on known users.
+
+    All of it runs on the calling thread (see ``_ridge_solve``); the
+    catalog scores are an ``einsum`` rather than ``Y @ u``. Trade-off: at
+    the 1M-item collect ceiling the single-threaded ``einsum`` takes
+    20-26 ms, where a threaded ``gemv`` takes 6-9 ms on an idle 4-core
+    host (17-26 ms on one thread) but spins the BLAS pool between
+    requests. No benchmarked catalog is that large.
     """
     rmap = {int(i): float(v) for i, v in seed_ratings}
     mask = np.isin(item_ids, np.array(list(rmap), dtype=np.int64))
@@ -183,10 +216,8 @@ def fold_in(
         return []
     # align ratings to Yr's row order (item_ids order), NOT seed order
     r = np.array([rmap[int(i)] for i in item_ids[mask]], dtype=np.float64)
-    k = Y.shape[1]
-    A = Yr.T @ Yr + reg * len(r) * np.eye(k)
-    u = np.linalg.solve(A, Yr.T @ r)
-    scores = Y @ u
+    u = _ridge_solve(Yr, r, reg)
+    scores = np.einsum("ij,j->i", Y, u)
     if exclude_rated:
         scores = np.where(mask, -np.inf, scores)
     top = np.argpartition(-scores, min(top_n, len(scores) - 1))[:top_n]
@@ -202,17 +233,19 @@ def fold_in_batch(
     applyInPandas (Arrow-vectorized, one small solve per user group)."""
     import pandas as pd
 
+    from ..shipping import ensure_package_shipped
+
+    # ``solve`` reaches ``_ridge_solve`` by reference: workers import it
+    ensure_package_shipped(seed_df.sparkSession)
     factors = F.broadcast(model.itemFactors.withColumnRenamed("id", "itemId"))
     joined = seed_df.join(factors, "itemId")
-    rank = model.rank
 
     # no type hints: under postponed annotations they reach PySpark as
     # strings, and the eval-type inference warns on every registration
     def solve(key, pdf):
         Yr = np.array(pdf["features"].tolist(), dtype=np.float64)
         r = pdf["rating"].to_numpy(dtype=np.float64)
-        A = Yr.T @ Yr + reg * len(r) * np.eye(rank)
-        u = np.linalg.solve(A, Yr.T @ r)
+        u = _ridge_solve(Yr, r, reg)
         return pd.DataFrame({"userId": [key[0]], "features": [u.tolist()]})
 
     return joined.groupBy("userId").applyInPandas(

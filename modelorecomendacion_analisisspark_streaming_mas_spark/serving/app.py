@@ -51,8 +51,11 @@ class RecommenderState:
 
 
 class CountsProvider:
-    """Pull-through cache over a callable returning the current aggregate
-    rows (e.g. ``lambda: spark.table(mem_sink_name).collect()``)."""
+    """Reads the current aggregate rows through a callable (e.g.
+    ``lambda: spark.table(mem_sink_name).collect()``). Nothing is cached:
+    every ``counts()`` call runs the callable -- a Spark job for a memory
+    sink -- under a lock, so each response holds the rows of the latest
+    committed epoch."""
 
     def __init__(self, fetch):
         self._fetch = fetch

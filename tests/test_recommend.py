@@ -3,13 +3,18 @@ fold-in agreement with ALSModel.transform, distributed fold-in twin."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import tempfile
+import textwrap
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from modelorecomendacion_analisisspark_streaming_mas_spark.ml.recommend import (
+    _ridge_solve,
     build_als,
     fold_in,
     fold_in_batch,
@@ -136,6 +141,67 @@ def test_fold_in_empty_seed(model_rmse):
     model, _ = model_rmse
     ids, Y = item_factor_matrix(model)
     assert fold_in(ids, Y, [(999999999, 5.0)]) == []
+
+
+@pytest.mark.parametrize("n_ratings", [1, 5, 60])
+def test_ridge_solve_matches_numpy_solve(n_ratings):
+    """The calling-thread solve agrees with the np.linalg.solve formulation
+    of the ridge system, for a 1-rating seed, a few ratings and more
+    ratings than the rank; fold_in's top-N follows from the same vector."""
+    rng = np.random.default_rng(n_ratings)
+    ids = np.arange(2000, dtype=np.int64)
+    Y = rng.uniform(0.0, 1.5, size=(2000, 20))
+    rated = np.sort(rng.choice(ids, n_ratings, replace=False))
+    r = rng.integers(1, 6, n_ratings).astype(np.float64)
+    Yr = Y[rated]
+    u_np = np.linalg.solve(Yr.T @ Yr + 0.1 * n_ratings * np.eye(20), Yr.T @ r)
+    np.testing.assert_allclose(_ridge_solve(Yr, r, 0.1), u_np, rtol=1e-10)
+
+    folded = fold_in(ids, Y, list(zip(rated.tolist(), r.tolist())), top_n=10)
+    scores = np.where(np.isin(ids, rated), -np.inf, Y @ u_np)
+    want = np.argsort(-scores)[:10]
+    assert [i for i, _ in folded] == ids[want].tolist()
+    np.testing.assert_allclose([s for _, s in folded], scores[want], rtol=1e-10)
+
+
+def test_fold_in_leaves_blas_pool_idle():
+    """Serving math stays on the request thread: ten fold_in calls a
+    second on a 2000x20 catalog must not wake OpenBLAS's thread pool,
+    whose threads spin between calls (``Y @ u`` or ``np.linalg.solve``
+    here read ~3x wall on 4 cores). A fresh interpreter keeps the test
+    process's own threads off the clock, and the thread caps are unset so
+    the check is of the code, not of the environment."""
+    code = textwrap.dedent(
+        """
+        import time
+        import numpy as np
+        from modelorecomendacion_analisisspark_streaming_mas_spark.ml.recommend import fold_in
+
+        rng = np.random.default_rng(7)
+        ids = np.arange(2000, dtype=np.int64)
+        Y = rng.uniform(0.0, 1.5, size=(2000, 20))
+        seed = [(3, 5.0), (11, 4.0), (400, 1.0)]
+        fold_in(ids, Y, seed)
+        time.sleep(0.5)  # let the pool's start-up spin run out
+        cpu0, wall0 = time.process_time(), time.perf_counter()
+        for _ in range(10):
+            fold_in(ids, Y, seed)
+            time.sleep(0.1)
+        print((time.process_time() - cpu0) / (time.perf_counter() - wall0))
+        """
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("OPENBLAS_NUM_THREADS", "GOTO_NUM_THREADS", "OMP_NUM_THREADS")
+    }
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, env=env,
+        capture_output=True, text=True, check=True,
+    )
+    cpu_share = float(out.stdout.split()[-1])
+    assert cpu_share < 0.5, cpu_share
 
 
 def test_tune_als_grid(ratings):

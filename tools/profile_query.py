@@ -35,6 +35,9 @@ def main() -> None:
     ap.add_argument("--warm", default="q02_flagship_top_tokens,e01_knn_bruteforce",
                     help="comma-separated warm-up entries run once untimed ('' to skip)")
     args = ap.parse_args()
+    if args.reps < 1:
+        # the timings and --explain-dir both need one timed run's frame
+        ap.error("--reps must be at least 1")
 
     from modelorecomendacion_analisisspark_streaming_mas_spark import get_spark
     from modelorecomendacion_analisisspark_streaming_mas_spark.plans import REGISTRY
